@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -234,9 +234,57 @@ object GraphOps {
   private def canonEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
 
+  /** The undirected simple graph of an edge list: each unordered pair
+    * once, as (low, high) in columns `u`/`v`, self-loops dropped.
+    */
+  private def undirectedSimple(edges: DataFrame, u: String = "u", v: String = "v"): DataFrame =
+    canonEdges(edges)
+      .select(least(col("src"), col("dst")).as(u), greatest(col("src"), col("dst")).as(v))
+      .where(col(u) =!= col(v)).distinct()
+
+  /** `GRAFT_GRAPH_TRACE` set: the loops print per-round progress lines
+    * to stderr.
+    */
+  private val tracing = sys.env.contains("GRAFT_GRAPH_TRACE")
+
+  private def trace(msg: => String): Unit = if (tracing) System.err.println(msg)
+
+  /** Trace lines of the form `<prefix> <label>: <seconds since the
+    * previous mark> s`.
+    */
+  private final class TraceClock(prefix: String) {
+    private var last = System.nanoTime()
+    def mark(label: => String): Unit = if (tracing) {
+      val now = System.nanoTime()
+      trace(f"$prefix $label: ${(now - last) / 1e9}%.2f s")
+      last = now
+    }
+  }
+
+  /** The whole-op local-vs-distributed split (see [[LocalEdgeThreshold]]).
+    * `e` is persisted at `level` when given (otherwise it is already a
+    * checkpoint or a cheap projection of one) and counted. At or under
+    * `maxLocalEdges` its rows are collected, the driver twin `local`
+    * builds the result from them and `e` is released. Above, `dist`
+    * gets `e` and its row count and owns its release.
+    */
+  private def twin(e: DataFrame, maxLocalEdges: Long, level: Option[StorageLevel] = None)
+      (local: Array[Row] => DataFrame)(dist: (DataFrame, Long) => DataFrame): DataFrame = {
+    val m = level.fold(e)(e.persist)
+    val n = m.count()
+    if (n > maxLocalEdges) dist(m, n)
+    else try local(m.collect()) finally if (level.nonEmpty) m.unpersist()
+  }
+
+  private def pairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** Distinct endpoints (column `v`) of an edge frame. */
+  private def vertexSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v"))).distinct()
+
   /** Collect a 2-long-column frame as pairs (the local twins' input). */
-  private def collectPairs(df: DataFrame): Array[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def collectPairs(df: DataFrame): Array[(Long, Long)] = pairs(df.collect())
 
   /** Driver-side adjacency list from collected edge pairs. */
   private def adjacencyOf(pairs: Array[(Long, Long)])
@@ -257,129 +305,73 @@ object GraphOps {
     */
   def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int = Int.MaxValue,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    val e = canonEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val tagged =
       if (sources.columns.contains("tag")) sources.select(col("tag").cast("long"), col("vertex").cast("long"))
       else sources.select(lit(0L).as("tag"), col("vertex").cast("long"))
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localBfs(e, tagged, maxDepth)
-      e.unpersist()
-      return out
-    }
-    var frontier = tagged.distinct().localCheckpoint()
-    var frontierRows = frontier.count()
-    // One eagerly-checkpointed job per level is the whole cost model:
-    // `visited` is the *lazy* union of checkpointed frames, compacted
-    // into a single checkpoint every CompactEvery levels so the plan
-    // the anti-join compiles stays bounded (an ever-growing union
-    // forces a fresh whole-stage-codegen compile per level — O(L²)
-    // compile work). The `level` column is attached *after* the
-    // checkpoint, so the per-level job's generated code is
-    // level-independent. The post-checkpoint count() is a cached scan.
-    val CompactEvery = 8
-    val frames = scala.collection.mutable.ArrayBuffer((0, frontier))
-    var visitedBase = frontier
-    val recent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var level = 0
-    // Super-broadcast frontiers take a shuffled join. The persisted
-    // edge frame has no partitioner, so every such level would
-    // re-exchange the FULL edge set — O(levels × edges) network, the
-    // scale-killer on a web graph where the frontier exceeds the
-    // broadcast bound within 2-3 hops. On the first such level the
-    // edge frame is re-persisted under HashPartitioning(src) (one
-    // edges-sized exchange, paid once) and [[hubSplit]] peels
-    // power-law hubs into a RoundRobin frame (auto threshold: a no-op
-    // on hub-free graphs); the cached tail partitioning then
-    // satisfies the join's required distribution on every later level
-    // and only the frontier side shuffles — O(levels × frontier) —
-    // while hub out-edges are probed by broadcast of the ≤|hubs|×tags
-    // frontier slice instead of straggling one task per level.
-    // Broadcast-only traversals never pay the repartition.
-    var eSplit: HubSplit = null
-    def partitionedSplit(): HubSplit = {
-      if (eSplit == null) {
-        val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-        eBySrc.count()
-        val od = eBySrc.groupBy("src").agg(count(lit(1)).as("od"))
-        eSplit = hubSplit(eBySrc, eCount, od, hubOutDegree,
-          releaseOnError = Seq(e))
-        // The unpartitioned copy is now redundant: a later
-        // broadcast-sized level joins the split frames just as well
-        // (broadcast joins ignore the probe side's partitioning), and
-        // holding both would double cached edge storage for the rest
-        // of the traversal — at web-graph scale that's the difference
-        // between fitting in storage memory and spilling.
-        e.unpersist()
-      }
-      eSplit
-    }
-    // frontier×edges rows for one level over whichever layout exists
-    def expand(f: DataFrame, broadcastSide: Boolean): DataFrame = {
-      if (eSplit == null && broadcastSide)
-        return e.join(broadcast(f), e("src") === f("vertex"))
-          .select(col("tag"), col("dst").as("vertex"))
-      val hs = partitionedSplit()
-      val fb = if (broadcastSide) broadcast(f) else f
-      val tailRows = hs.tail.join(fb, hs.tail("src") === fb("vertex"))
-        .select(col("tag"), col("dst").as("vertex"))
-      hs.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubF = broadcast(f.join(
-            broadcast(hs.hubDeg.get.select(col("src").as("vertex"))),
-            Seq("vertex"), "left_semi"))
-          tailRows.unionAll(
-            hubE.join(hubF, hubE("src") === hubF("vertex"))
-              .select(col("tag"), col("dst").as("vertex")))
-      }
-    }
-    while (frontierRows > 0 && level < maxDepth) {
-      level += 1
-      val visited = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
-      val small = frontierRows <= broadcastFrontier
-      val nextRaw = expand(frontier, small)
-        .distinct()
-        .join(visited, Seq("tag", "vertex"), "left_anti")
-      // Small frontiers collapse to one partition so the checkpointed
-      // frames stay single-task (the visited union then scans L tasks,
-      // not L × shuffle-partitions).
-      val t0 = System.nanoTime()
-      val next = (if (frontierRows <= 1000000) nextRaw.coalesce(1) else nextRaw)
-        .localCheckpoint()
-      frontierRows = next.count()
-      if (sys.env.contains("GRAFT_GRAPH_TRACE"))
-        System.err.println(f"GRAFT_BFS level=$level frontier=$frontierRows " +
+    twin(canonEdges(edges), maxLocalEdges, Some(StorageLevel.MEMORY_AND_DISK))(
+        localBfs(_, tagged, maxDepth)) { (e, eCount) =>
+      var frontier = tagged.distinct().localCheckpoint()
+      var frontierRows = frontier.count()
+      // One eagerly-checkpointed job per level is the whole cost model:
+      // `visited` is the *lazy* union of checkpointed frames, compacted
+      // into a single checkpoint every CompactEvery levels so the plan
+      // the anti-join compiles stays bounded (an ever-growing union
+      // forces a fresh whole-stage-codegen compile per level — O(L²)
+      // compile work). The `level` column is attached *after* the
+      // checkpoint, so the per-level job's generated code is
+      // level-independent. The post-checkpoint count() is a cached scan.
+      val CompactEvery = 8
+      val frames = scala.collection.mutable.ArrayBuffer((0, frontier))
+      var visitedBase = frontier
+      val recent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var level = 0
+      val layout = new FrontierEdges(e, eCount, hubOutDegree, "bfs", releaseBase = true)
+      while (frontierRows > 0 && level < maxDepth) {
+        level += 1
+        val visited = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
+        val small = frontierRows <= broadcastFrontier
+        val nextRaw = layout.expand(frontier, small, "src", "vertex",
+            (j, _) => j.select(col("tag"), col("dst").as("vertex")))
+          .distinct()
+          .join(visited, Seq("tag", "vertex"), "left_anti")
+        // Small frontiers collapse to one partition so the checkpointed
+        // frames stay single-task (the visited union then scans L tasks,
+        // not L × shuffle-partitions).
+        val t0 = System.nanoTime()
+        val next = (if (frontierRows <= 1000000) nextRaw.coalesce(1) else nextRaw)
+          .localCheckpoint()
+        frontierRows = next.count()
+        trace(f"GRAFT_BFS level=$level frontier=$frontierRows " +
           f"sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      if (frontierRows > 0) {
-        frames += ((level, next))
-        recent += next
-        if (recent.size >= CompactEvery) {
-          visitedBase = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
-            .coalesce(math.max(1, e.rdd.getNumPartitions / 4)).localCheckpoint()
-          recent.clear()
+        if (frontierRows > 0) {
+          frames += ((level, next))
+          recent += next
+          if (recent.size >= CompactEvery) {
+            visitedBase = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
+              .coalesce(math.max(1, e.rdd.getNumPartitions / 4)).localCheckpoint()
+            recent.clear()
+          }
         }
+        frontier = next
       }
-      frontier = next
+      layout.releaseAll()
+      frames.map { case (lvl, df) => df.withColumn("level", lit(lvl)) }
+        .reduce(_ unionAll _)
     }
-    e.unpersist()
-    if (eSplit != null) eSplit.unpersistAll()
-    frames.map { case (lvl, df) => df.withColumn("level", lit(lvl)) }
-      .reduce(_ unionAll _)
   }
 
   /** Driver-side twin of the frontier loop for sub-threshold graphs:
     * same (tag, vertex, level) min-hop contract, identical output.
     */
-  private def localBfs(e: DataFrame, tagged: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = e.sparkSession
+  private def localBfs(rows: Array[Row], tagged: DataFrame, maxDepth: Int): DataFrame = {
+    val spark = tagged.sparkSession
     import spark.implicits._
     // Flat adjacency map (vertex → growable neighbor array): O(E) build
     // with primitive arrays — a Scala groupBy here costs more than the
     // traversal itself at millions of edges.
     val adj = new java.util.HashMap[Long, Array[Long]]()
     val fill = new java.util.HashMap[Long, Int]()
-    e.collect().foreach { r =>
+    rows.foreach { r =>
       val s = r.getLong(0); val d = r.getLong(1)
       val cur = adj.get(s)
       if (cur == null) { adj.put(s, Array(d, 0L, 0L, 0L)); fill.put(s, 1) }
@@ -519,13 +511,7 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val trace = sys.env.contains("GRAFT_GRAPH_TRACE")
-    var tLast = System.nanoTime()
-    def tmark(label: String): Unit = if (trace) {
-      val now = System.nanoTime()
-      System.err.println(f"GRAFT_CC $label: ${(now - tLast) / 1e9}%.2f s")
-      tLast = now
-    }
+    val clock = new TraceClock("GRAFT_CC")
     // One checkpoint of the raw edge list: the self-loop vertex scan
     // and (on the local path) the collect both read it — without this
     // each consumer re-runs the caller's derivation pipeline. SKIPPED
@@ -538,9 +524,7 @@ object GraphOps {
     val ceOwned = RoundCheckpoints.ownRddId(edges).isEmpty
     val ce =
       if (ceOwned) canonEdges(edges).localCheckpoint() else canonEdges(edges)
-    tmark(s"canon-ckpt owned=$ceOwned")
-    val spark = edges.sparkSession
-    import spark.implicits._
+    clock.mark(s"canon-ckpt owned=$ceOwned")
     // NO .distinct() here (r21): every consumer below is a union-find
     // pass (duplicate edges are free re-unions) or a bounded driver
     // collect, so the full-width dedup exchange the old path paid on
@@ -550,9 +534,23 @@ object GraphOps {
     val e1 = ce
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
-    val n0 = e1.count()
-    tmark(s"canon-edges n=$n0")
-    if (n0 <= maxLocalEdges) return localCc(spark, e1, ce)
+    twin(e1, maxLocalEdges) { rows =>
+      clock.mark(s"canon-edges n=${rows.length}")
+      localCc(edges.sparkSession, pairs(rows), e1, ce)
+    } { (und, n0) =>
+      clock.mark(s"canon-edges n=$n0")
+      distCc(und, n0, ce, ceOwned, maxLocalEdges, clock)
+    }
+  }
+
+  /** The distributed body of [[connectedComponents]]: `e1` is the
+    * canonical (u < v) undirected frame of `n0` rows over the raw-edge
+    * frame `ce` (released here when `ceOwned`).
+    */
+  private def distCc(e1: DataFrame, n0: Long, ce: DataFrame, ceOwned: Boolean,
+      maxLocalEdges: Long, clock: TraceClock): DataFrame = {
+    val spark = e1.sparkSession
+    import spark.implicits._
     // Iterated local contraction (the two-phase optimization of
     // Kiveris et al. §6, applied to a fixpoint): each partition
     // union-finds its OWN edges — a narrow pass, zero shuffle — and
@@ -594,7 +592,7 @@ object GraphOps {
     var e = contract(e1).localCheckpoint()
     var n = e.count()
     var parts = e.rdd.getNumPartitions
-    tmark(s"contract pass=1 parts=$parts edges=$n")
+    clock.mark(s"contract pass=1 parts=$parts edges=$n")
     var prevCkpt = e
     var pass = 1
     // keep quartering while it still shrinks ≥ 20% per pass — a stall
@@ -613,10 +611,10 @@ object GraphOps {
       n = next.count()
       releaseCheckpoint(prevCkpt)
       e = next; prevCkpt = next
-      tmark(s"contract pass=$pass parts=$parts edges=$n")
+      clock.mark(s"contract pass=$pass parts=$parts edges=$n")
     }
     if (n <= maxLocalEdges) {
-      val out = localCc(spark, e, ce)
+      val out = localCc(spark, collectPairs(e), e, ce)
       // blocking release: the local result is driver-built, so the
       // contraction checkpoints and the raw-edge frame free inside
       // this op's own wall (r19 verdict #2 discipline)
@@ -633,7 +631,7 @@ object GraphOps {
       .unionAll(e.select(col("v").as("vertex")))
       .unionAll(ce.where(col("src") === col("dst")).select(col("src").as("vertex")))
       .distinct().localCheckpoint()
-    tmark(s"allverts-ckpt")
+    clock.mark(s"allverts-ckpt")
     val eContracted = e // pre-loop contraction checkpoint, released at drain
     var converged = false
     var rounds = 0
@@ -681,7 +679,7 @@ object GraphOps {
         .select(col("m").as("u"), col("x").as("v"))
         .distinct())
       val nsig = checksum(ss)
-      tmark(s"round=$rounds edges=${nsig._1}")
+      clock.mark(s"round=$rounds edges=${nsig._1}")
       converged = nsig == sig
       sig = nsig
       e = ss
@@ -694,7 +692,7 @@ object GraphOps {
       // edges and this cuts the loop from 4 rounds to 1. At true
       // scale the set stays above threshold and the loop runs on.
       if (!converged && nsig._1 <= maxLocalEdges)
-        return localCc(edges.sparkSession, e, ce)
+        return localCc(spark, collectPairs(e), e, ce)
     }
     val labels = e.select(col("v").as("vertex"), col("u").as("component"))
       .unionAll(e.select(col("u").as("vertex"), col("u").as("component")))
@@ -720,25 +718,18 @@ object GraphOps {
     * so this avoids the 2·|E|-row dedup exchange over the raw edge
     * list the old path paid, 49 s at ×100).
     */
-  private def localCc(spark: SparkSession, undirected: DataFrame,
-      allEdges: DataFrame): DataFrame = {
+  private def localCc(spark: SparkSession, es: Array[(Long, Long)],
+      undirected: DataFrame, allEdges: DataFrame): DataFrame = {
     import spark.implicits._
-    val trace = sys.env.contains("GRAFT_GRAPH_TRACE")
-    var tL = System.nanoTime()
-    def tm(label: String): Unit = if (trace) {
-      val now = System.nanoTime()
-      System.err.println(f"GRAFT_CC local $label: ${(now - tL) / 1e9}%.2f s")
-      tL = now
-    }
-    val es = collectPairs(undirected)
-    tm(s"collect-pairs n=${es.length}")
+    val clock = new TraceClock("GRAFT_CC local")
+    clock.mark(s"collect-pairs n=${es.length}")
     val uc = undirected.columns
     val verts = undirected.select(col(uc(0)).as("vertex"))
       .unionAll(undirected.select(col(uc(1)).as("vertex")))
       .unionAll(allEdges.where(col("src") === col("dst"))
         .select(col("src").as("vertex")))
       .distinct().collect().map(_.getLong(0))
-    tm(s"collect-verts n=${verts.length}")
+    clock.mark(s"collect-verts n=${verts.length}")
     val parent = new LongLongOpenMap(1 << 16)
     def find(x: Long): Long = {
       var r = x
@@ -754,14 +745,10 @@ object GraphOps {
       if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
     }
     val out = verts.map(v => (v, find(v))).toSeq.toDF("vertex", "component")
-    tm("union-find")
+    clock.mark("union-find")
     out
   }
 
-  /** Damped PageRank, fixed iteration count. Dangling-vertex mass is
-    * dropped (both the engine and the oracle use the same convention).
-    * All vertices (src ∪ dst) receive the (1-d)/N base term.
-    */
   /** Hub floor for the push-loop two-frame split: a source only counts
     * as a hub when its out-edge list both exceeds an ideal partition's
     * share (edges / shuffle partitions) AND this absolute floor —
@@ -829,6 +816,88 @@ object GraphOps {
     }
   }
 
+  /** The frontier-join edge layout of the level-synchronous loops
+    * ([[bfs]], [[sssp]], [[distBrandes]]) over the persisted edge frame
+    * `e`. Broadcast-sized frontiers join `e` itself shuffle-free.
+    * Super-broadcast frontiers take a shuffled join, and `e` has no
+    * partitioner, so every such level would re-exchange the FULL edge
+    * set — O(levels × edges) network, the scale-killer on a web graph
+    * where the frontier exceeds the broadcast bound within 2-3 hops.
+    * So the first such level on a join key re-persists `e`
+    * hash-partitioned by that key (one edges-sized exchange, paid once)
+    * and [[hubSplit]] peels power-law hubs into a round-robin frame
+    * (auto threshold: a no-op on hub-free graphs). From then on every
+    * level on that key joins the split frames — broadcast joins ignore
+    * the probe side's partitioning — so only the frontier shuffles,
+    * O(levels × frontier), and hub out-edges are probed by broadcast of
+    * the ≤|hubs|×tags frontier slice instead of straggling one task per
+    * level. Broadcast-only traversals never pay the repartition.
+    *
+    * By-src copies are MEMORY_AND_DISK; by-dst copies (the backward
+    * sweep's) are DISK_ONLY like [[hits]]'s: one sequential read per
+    * level, so the cached memory footprint stays one edges-sized frame.
+    * With `releaseBase` the unpartitioned `e` is released once a split
+    * exists — a single-key loop never reads it again, and holding both
+    * would double cached edge storage for the rest of the traversal.
+    * Each copy's persist and release is reported to [[cacheAudit]] as
+    * `<op>:eBy<Key>:<event>`.
+    */
+  private final class FrontierEdges(e: DataFrame, eCount: Long, hubOutDegree: Long,
+      op: String, releaseBase: Boolean) {
+    private val splits = scala.collection.mutable.Map.empty[String, HubSplit]
+
+    private def marker(key: String, event: String): String =
+      s"$op:eBy${key.capitalize}:$event"
+
+    private def split(key: String): HubSplit = splits.getOrElseUpdate(key, {
+      val (level, levelName) =
+        if (key == "dst") (StorageLevel.DISK_ONLY, "DISK_ONLY")
+        else (StorageLevel.MEMORY_AND_DISK, "MEMORY_AND_DISK")
+      val byKey = e.repartition(col(key)).persist(level)
+      byKey.count()
+      val deg = byKey.groupBy(key).agg(count(lit(1)).as("od"))
+      val hs = hubSplit(byKey, eCount, deg, hubOutDegree, key = key,
+        tailLevel = level, releaseOnError = Seq(e))
+      audit(marker(key, levelName))
+      if (releaseBase) e.unpersist()
+      hs
+    })
+
+    /** frontier×edges rows for one level: `f` joins the edges on
+      * `e(key) === f(probeKey)` and `project` shapes the joined rows
+      * (it gets the join and the frontier side it was joined with).
+      */
+    def expand(f: DataFrame, broadcastSide: Boolean, key: String, probeKey: String,
+        project: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      if (!splits.contains(key) && broadcastSide) {
+        val fb = broadcast(f)
+        return project(e.join(fb, e(key) === fb(probeKey)), fb)
+      }
+      val hs = split(key)
+      val fb = if (broadcastSide) broadcast(f) else f
+      val tailRows = project(hs.tail.join(fb, hs.tail(key) === fb(probeKey)), fb)
+      hs.hub match {
+        case None => tailRows
+        case Some(hubE) =>
+          val hubF = broadcast(f.join(
+            broadcast(hs.hubDeg.get.select(col(key).as(probeKey))),
+            Seq(probeKey), "left_semi"))
+          tailRows.unionAll(
+            project(hubE.join(hubF, hubE(key) === hubF(probeKey)), hubF))
+      }
+    }
+
+    def release(key: String): Unit = splits.remove(key).foreach { hs =>
+      hs.unpersistAll()
+      audit(marker(key, "released"))
+    }
+
+    def releaseAll(): Unit = {
+      e.unpersist()
+      splits.keys.toList.foreach(release)
+    }
+  }
+
   /** One push-loop iteration's (dst, rank/outdeg) contributions over a
     * [[HubSplit]] layout: the tail side is the classic exchange-free
     * join (only `ranks` shuffles to src); the hub side joins the
@@ -852,8 +921,38 @@ object GraphOps {
     }
   }
 
+  /** Damped PageRank, fixed iteration count. Dangling-vertex mass is
+    * dropped (both the engine and the oracle use the same convention).
+    * All vertices (src ∪ dst) receive the (1-d)/N base term.
+    */
   def pagerank(edges: DataFrame, iters: Int, d: Double = 0.85,
+      maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame =
+    pushRank(edges, None, iters, d, maxLocalEdges, hubOutDegree)
+
+  /** Personalized PageRank (random walk with restart to a seed set):
+    * the reset mass (1−d) returns to the seeds instead of spreading
+    * uniformly, so rank measures proximity *to the seeds* — the
+    * "find more like these" primitive under seed-expansion sampling
+    * of a web/citation graph. Same fixed-iteration push loop as
+    * [[pagerank]] (one join + one aggregation per round, shuffled on
+    * the vertex id; dangling mass dropped by the same convention on
+    * both engines); the seed set rides along as a broadcast literal
+    * — it is user-input-sized, not graph-sized.
+    */
+  def ppr(edges: DataFrame, seeds: Seq[Long], iters: Int, d: Double = 0.85,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
+    require(seeds.nonEmpty, "PPR needs a non-empty seed set")
+    pushRank(edges, Some(seeds), iters, d, maxLocalEdges, hubOutDegree)
+  }
+
+  /** The push loop of [[pagerank]] (`seeds` None) and [[ppr]]. Each
+    * vertex v has a teleport share s(v) — 1/n uniformly, or its share
+    * of the seed set — that is also its starting rank; each round
+    * rank(v) = reset(v) + d · Σ pushed contributions, with the reset
+    * term (1−d)/n for PageRank and (1−d)·s(v) for PPR.
+    */
+  private def pushRank(edges: DataFrame, seeds: Option[Seq[Long]], iters: Int, d: Double,
+      maxLocalEdges: Long, hubOutDegree: Long): DataFrame = {
     // repartition(src) BEFORE distinct: HashPartitioning(src) satisfies
     // the dedup aggregation's ClusteredDistribution(src, dst), so the
     // cached frame is born hash-partitioned by src for ONE exchange —
@@ -878,132 +977,67 @@ object GraphOps {
     // cached partition bounded, per-iteration plan otherwise
     // unchanged, and on hub-free graphs (every shipped one) the split
     // is a no-op with the identical pre-r13 plan.
-    val e = canonEdges(edges).repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localPagerank(edges.sparkSession, e, iters, d)
-      e.unpersist()
-      return out
+    val born = canonEdges(edges).repartition(col("src")).distinct()
+    twin(born, maxLocalEdges, Some(StorageLevel.MEMORY_AND_DISK))(
+        rows => localPushRank(edges.sparkSession, pairs(rows), seeds, iters, d)) { (e, eCount) =>
+      val verts = vertexSet(e).localCheckpoint()
+      // (v, s) share frame and the reset term over it
+      val (share, reset) = seeds match {
+        case None =>
+          val n = verts.count()
+          (verts.withColumn("s", lit(1.0 / n)), lit((1.0 - d) / n))
+        case Some(ss) =>
+          (verts.withColumn("s",
+            when(col("v").isInCollection(ss), lit(1.0 / ss.size)).otherwise(lit(0.0)))
+            .localCheckpoint(), lit(1.0 - d) * col("s"))
+      }
+      val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val hs = hubSplit(e, eCount, outdeg, hubOutDegree)
+      var ranks = share.select(col("v"), col("s").as("r"))
+      for (_ <- 1 to iters) {
+        val contribs = pushContribs(hs, ranks)
+        ranks = share.join(contribs.groupBy("v").agg(sum("c").as("c")), Seq("v"), "left")
+          .select(col("v"), (reset + lit(d) * coalesce(col("c"), lit(0.0))).as("r"))
+          .localCheckpoint()
+      }
+      hs.unpersistAll(); outdeg.unpersist()
+      ranks.select(col("v").as("vertex"), col("r").as("rank"))
     }
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    val n = verts.count()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hubSplit(e, eCount, outdeg, hubOutDegree)
-    var ranks = verts.withColumn("r", lit(1.0 / n))
-    for (_ <- 1 to iters) {
-      val contribs = pushContribs(hs, ranks)
-      ranks = verts.join(contribs.groupBy("v").agg(sum("c").as("s")), Seq("v"), "left")
-        .select(col("v"),
-          (lit((1.0 - d) / n) + lit(d) * coalesce(col("s"), lit(0.0))).as("r"))
-        .localCheckpoint()
-    }
-    hs.unpersistAll(); outdeg.unpersist()
-    ranks.select(col("v").as("vertex"), col("r").as("rank"))
   }
 
-  /** Driver-side PageRank twin for sub-threshold graphs. Contribution
-    * sums accumulate in a different order than the distributed
-    * aggregation, but callers round ranks (6 dp) ~10 orders of
-    * magnitude above double-summation reorder noise.
+  /** Driver-side twin of [[pushRank]] for sub-threshold graphs, with
+    * the same per-vertex arithmetic. Contribution sums accumulate in a
+    * different order than the distributed aggregation, but callers
+    * round ranks (6 dp) ~10 orders of magnitude above
+    * double-summation reorder noise.
     */
-  private def localPagerank(spark: SparkSession, e: DataFrame,
-      iters: Int, d: Double): DataFrame = {
+  private def localPushRank(spark: SparkSession, es: Array[(Long, Long)],
+      seeds: Option[Seq[Long]], iters: Int, d: Double): DataFrame = {
     import spark.implicits._
-    val es = collectPairs(e)
     val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
     val n = verts.length
+    val (share, reset): (Long => Double, Long => Double) = seeds match {
+      case None => (_ => 1.0 / n, _ => (1.0 - d) / n)
+      case Some(ss) =>
+        val seedSet = ss.toSet
+        val s = (v: Long) => if (seedSet(v)) 1.0 / ss.size else 0.0
+        (s, v => (1.0 - d) * s(v))
+    }
     val outdeg = new java.util.HashMap[Long, Long]()
     es.foreach { case (s, _) => outdeg.merge(s, 1L, _ + _) }
     var rank = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => rank.put(v, 1.0 / n))
+    verts.foreach(v => rank.put(v, share(v)))
     for (_ <- 1 to iters) {
       val acc = new java.util.HashMap[Long, Double]()
       es.foreach { case (s, t) =>
         acc.merge(t, rank.get(s) / outdeg.get(s), _ + _)
       }
       val next = new java.util.HashMap[Long, Double]()
-      verts.foreach { v =>
-        next.put(v, (1.0 - d) / n + d * acc.getOrDefault(v, 0.0))
-      }
+      verts.foreach(v => next.put(v, reset(v) + d * acc.getOrDefault(v, 0.0)))
       rank = next
     }
     verts.map(v => (v, rank.get(v))).toSeq.toDF("vertex", "rank")
-  }
-
-  private def localPpr(spark: SparkSession, e: DataFrame, seeds: Seq[Long],
-      iters: Int, d: Double): DataFrame = {
-    import spark.implicits._
-    val es = collectPairs(e)
-    val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val seedSet = seeds.toSet
-    val reset = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => reset.put(v, if (seedSet(v)) 1.0 / seeds.size else 0.0))
-    val outdeg = new java.util.HashMap[Long, Long]()
-    es.foreach { case (s, _) => outdeg.merge(s, 1L, _ + _) }
-    var rank = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => rank.put(v, reset.get(v)))
-    for (_ <- 1 to iters) {
-      val acc = new java.util.HashMap[Long, Double]()
-      es.foreach { case (s, t) =>
-        acc.merge(t, rank.get(s) / outdeg.get(s), _ + _)
-      }
-      val next = new java.util.HashMap[Long, Double]()
-      verts.foreach { v =>
-        next.put(v, (1.0 - d) * reset.get(v) + d * acc.getOrDefault(v, 0.0))
-      }
-      rank = next
-    }
-    verts.map(v => (v, rank.get(v))).toSeq.toDF("vertex", "rank")
-  }
-
-  /** Personalized PageRank (random walk with restart to a seed set):
-    * the reset mass (1−d) returns to the seeds instead of spreading
-    * uniformly, so rank measures proximity *to the seeds* — the
-    * "find more like these" primitive under seed-expansion sampling
-    * of a web/citation graph. Same fixed-iteration push loop as
-    * [[pagerank]] (one join + one aggregation per round, shuffled on
-    * the vertex id; dangling mass dropped by the same convention on
-    * both engines); the seed set rides along as a broadcast literal
-    * — it is user-input-sized, not graph-sized.
-    */
-  def ppr(edges: DataFrame, seeds: Seq[Long], iters: Int, d: Double = 0.85,
-      maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    require(seeds.nonEmpty, "PPR needs a non-empty seed set")
-    // Same born-partitioned edge cache as [[pagerank]]: one exchange,
-    // then the per-iteration push join is exchange-free on the edge
-    // side — with the same [[hubSplit]] two-frame layout against
-    // power-law hub stragglers.
-    val e = canonEdges(edges).repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localPpr(edges.sparkSession, e, seeds, iters, d)
-      e.unpersist()
-      return out
-    }
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    val seedCol = col("v").isInCollection(seeds)
-    val reset = verts.withColumn("s",
-      when(seedCol, lit(1.0 / seeds.size)).otherwise(lit(0.0)))
-      .localCheckpoint()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hubSplit(e, eCount, outdeg, hubOutDegree)
-    var ranks = reset.select(col("v"), col("s").as("r"))
-    for (_ <- 1 to iters) {
-      val contribs = pushContribs(hs, ranks)
-      ranks = reset.join(contribs.groupBy("v").agg(sum("c").as("s2")), Seq("v"), "left")
-        .select(col("v"), col("s"),
-          (lit(1.0 - d) * col("s") + lit(d) * coalesce(col("s2"), lit(0.0))).as("r"))
-        .localCheckpoint()
-        .select(col("v"), col("r"))
-    }
-    hs.unpersistAll(); outdeg.unpersist()
-    ranks.select(col("v").as("vertex"), col("r").as("rank"))
   }
 
   /** k-core decomposition membership: iteratively strip vertices of
@@ -1015,31 +1049,30 @@ object GraphOps {
     * detected on the edge count (pruning is monotone).
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = Int.MaxValue,
-      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    var e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    var n = e.count()
-    if (n <= maxLocalEdges) return localKCore(edges.sparkSession, e, k)
-    var prev = -1L
-    var rounds = 0
-    // linear prune chain: round N reads only round N-1's edge frame,
-    // so superseded edge checkpoints free inline (RoundCheckpoints)
-    val hy = new RoundCheckpoints(edges.sparkSession.sparkContext)
-    while (n != prev && n > 0 && rounds < maxRounds) {
-      rounds += 1
-      prev = n
-      val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-        .groupBy("x").agg(count(lit(1)).as("d"))
-      val keep = deg.where(col("d") >= k).select("x")
-      e = hy.ckpt(e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("x").as("v")), Seq("v"), "left_semi"))
-      n = e.count()
-      hy.endRound()
+      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
+    twin(undirectedSimple(edges).localCheckpoint(), maxLocalEdges)(
+        rows => localKCore(edges.sparkSession, pairs(rows), k)) { (e0, n0) =>
+      var e = e0
+      var n = n0
+      var prev = -1L
+      var rounds = 0
+      // linear prune chain: round N reads only round N-1's edge frame,
+      // so superseded edge checkpoints free inline (RoundCheckpoints)
+      val hy = new RoundCheckpoints(edges.sparkSession.sparkContext)
+      while (n != prev && n > 0 && rounds < maxRounds) {
+        rounds += 1
+        prev = n
+        val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
+          .groupBy("x").agg(count(lit(1)).as("d"))
+        val keep = deg.where(col("d") >= k).select("x")
+        e = hy.ckpt(e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
+          .join(keep.select(col("x").as("v")), Seq("v"), "left_semi"))
+        n = e.count()
+        hy.endRound()
+      }
+      e.select(col("u").as("vertex")).unionAll(e.select(col("v").as("vertex")))
+        .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
     }
-    e.select(col("u").as("vertex")).unionAll(e.select(col("v").as("vertex")))
-      .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
-  }
 
   /** Full core decomposition (coreness per vertex — Batagelj &
     * Zaveršnik 2003): coreness(v) = max k such that v survives the
@@ -1075,14 +1108,9 @@ object GraphOps {
   @volatile private[graft] var lastCorenessRounds: Int = 0
 
   def coreness(edges: DataFrame,
-      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val spark = edges.sparkSession
-    val e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    if (e.count() <= maxLocalEdges) return localCoreness(spark, e)
-    corenessHIndex(e)
-  }
+      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
+    twin(undirectedSimple(edges).localCheckpoint(), maxLocalEdges)(
+      rows => localCoreness(edges.sparkSession, pairs(rows)))((e, _) => corenessHIndex(e))
 
   /** Distributed h-index fixpoint core for [[coreness]] on a canonical
     * checkpointed `(u, v)` frame. Estimates start at the degree; each
@@ -1193,9 +1221,7 @@ object GraphOps {
   private[graft] def corenessPeel(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
+    var e = undirectedSimple(edges).localCheckpoint()
     var n = e.count()
     val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 0L
@@ -1237,21 +1263,14 @@ object GraphOps {
   /** Driver-side coreness twin: the same incremental peel on a
     * collected edge array.
     */
-  private def localCoreness(spark: SparkSession, undirected: DataFrame): DataFrame = {
+  private def localCoreness(spark: SparkSession, undirected: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    var es = collectPairs(undirected)
+    var es = undirected
     val core = new java.util.HashMap[Long, Long]()
     es.foreach { case (u, v) => core.put(u, 1L); core.put(v, 1L) }
     var k = 2L
     while (es.nonEmpty) {
-      var changed = true
-      while (changed && es.nonEmpty) {
-        val deg = new java.util.HashMap[Long, Long]()
-        es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
-        val next = es.filter { case (u, v) => deg.get(u) >= k && deg.get(v) >= k }
-        changed = next.length != es.length
-        es = next
-      }
+      es = kCorePrune(es, k)
       es.foreach { case (u, v) => core.put(u, k); core.put(v, k) }
       k += 1
     }
@@ -1291,25 +1310,25 @@ object GraphOps {
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    val m0 = e.count()
-    if (m0 <= maxLocalEdges) return localDensest(spark, e)
-    val (removedAt, stats) = densestPeelRounds(e, m0)
-    if (stats.isEmpty) return Seq.empty[(Long, Double)].toDF("vertex", "density")
-    // exact-rational argmax of m/n across rounds; earliest on ties
-    var best = 0
-    for (i <- 1 until stats.length)
-      if (BigInt(stats(i)._2) * BigInt(stats(best)._1) >
-          BigInt(stats(best)._2) * BigInt(stats(i)._1)) best = i
-    val (bn, bm) = stats(best)
-    removedAt
-      .foldLeft(Seq.empty[(Long, Int)].toDF("vertex", "removal_round"))(_ unionAll _)
-      .where(col("removal_round") >= best + 1)
-      .select(col("vertex"))
-      .withColumn("density",
-        round(lit(bm).cast("double") / lit(bn).cast("double"), 6))
+    twin(undirectedSimple(edges).localCheckpoint(), maxLocalEdges)(
+        rows => localDensest(spark, pairs(rows))) { (e, m0) =>
+      val (removedAt, stats) = densestPeelRounds(e, m0)
+      if (stats.isEmpty) Seq.empty[(Long, Double)].toDF("vertex", "density")
+      else {
+        // exact-rational argmax of m/n across rounds; earliest on ties
+        var best = 0
+        for (i <- 1 until stats.length)
+          if (BigInt(stats(i)._2) * BigInt(stats(best)._1) >
+              BigInt(stats(best)._2) * BigInt(stats(i)._1)) best = i
+        val (bn, bm) = stats(best)
+        removedAt
+          .foldLeft(Seq.empty[(Long, Int)].toDF("vertex", "removal_round"))(_ unionAll _)
+          .where(col("removal_round") >= best + 1)
+          .select(col("vertex"))
+          .withColumn("density",
+            round(lit(bm).cast("double") / lit(bn).cast("double"), 6))
+      }
+    }
   }
 
   /** Distributed threshold-peel core for [[densestSubgraph]]: runs the
@@ -1359,13 +1378,12 @@ object GraphOps {
   /** Driver-side densest-subgraph twin: the identical threshold peel
     * and exact-rational best-round pick on a collected edge array.
     */
-  private def localDensest(spark: SparkSession, undirected: DataFrame): DataFrame = {
+  private def localDensest(spark: SparkSession, undirected: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    var es = collectPairs(undirected)
+    var es = undirected
     val snaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Array[Long])]
     while (es.nonEmpty) {
-      val deg = new java.util.HashMap[Long, Long]()
-      es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
+      val deg = undirectedDegrees(es)
       val n = deg.size.toLong
       val m = es.length.toLong
       import scala.jdk.CollectionConverters._
@@ -1387,21 +1405,33 @@ object GraphOps {
   /** Driver-side k-core twin for sub-threshold graphs: identical
     * monotone-prune fixpoint, exact integer degrees.
     */
-  private def localKCore(spark: SparkSession, undirected: DataFrame, k: Int): DataFrame = {
+  private def localKCore(spark: SparkSession, undirected: Array[(Long, Long)], k: Int): DataFrame = {
     import spark.implicits._
-    var es = collectPairs(undirected)
+    import scala.jdk.CollectionConverters._
+    undirectedDegrees(kCorePrune(undirected, k)).asScala.toSeq
+      .map { case (v, c) => (v, c) }.toDF("vertex", "core_deg")
+  }
+
+  /** Per-vertex degree of an undirected edge array. */
+  private def undirectedDegrees(es: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
+    val deg = new java.util.HashMap[Long, Long]()
+    es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
+    deg
+  }
+
+  /** The k-core of an undirected edge array: drop edges with an
+    * endpoint of degree < k until nothing changes.
+    */
+  private def kCorePrune(undirected: Array[(Long, Long)], k: Long): Array[(Long, Long)] = {
+    var es = undirected
     var changed = true
     while (changed && es.nonEmpty) {
-      val deg = new java.util.HashMap[Long, Long]()
-      es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
+      val deg = undirectedDegrees(es)
       val next = es.filter { case (u, v) => deg.get(u) >= k && deg.get(v) >= k }
       changed = next.length != es.length
       es = next
     }
-    val deg = new java.util.HashMap[Long, Long]()
-    es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
-    import scala.jdk.CollectionConverters._
-    deg.asScala.toSeq.map { case (v, c) => (v, c) }.toDF("vertex", "core_deg")
+    es
   }
 
   /** k-truss decomposition of the undirected simple graph: the maximal
@@ -1423,11 +1453,6 @@ object GraphOps {
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     require(k >= 3, s"kTruss needs k >= 3, got $k")
-    var e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    var n = e.count()
-    if (n <= maxLocalEdges) return localKTruss(edges.sparkSession, e, k)
     def support(ed: DataFrame): DataFrame = {
       val tri = ed.as("x")
         .join(ed.as("y"), col("y.u") === col("x.v"))
@@ -1438,31 +1463,36 @@ object GraphOps {
         .unionAll(tri.select(col("b").as("u"), col("c").as("v")))
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
     }
-    var prev = -1L
-    var rounds = 0
-    while (n != prev && n > 0 && rounds < maxRounds) {
-      rounds += 1
-      prev = n
-      val keep = support(e).where(col("support") >= k - 2).select("u", "v")
-      e = e.join(keep, Seq("u", "v"), "left_semi").localCheckpoint()
-      n = e.count()
+    twin(undirectedSimple(edges).localCheckpoint(), maxLocalEdges)(
+        rows => localKTruss(edges.sparkSession, pairs(rows), k)) { (e0, n0) =>
+      var e = e0
+      var n = n0
+      var prev = -1L
+      var rounds = 0
+      while (n != prev && n > 0 && rounds < maxRounds) {
+        rounds += 1
+        prev = n
+        val keep = support(e).where(col("support") >= k - 2).select("u", "v")
+        e = e.join(keep, Seq("u", "v"), "left_semi").localCheckpoint()
+        n = e.count()
+      }
+      require(n == prev || n == 0,
+        s"kTruss did not converge in $maxRounds rounds ($n edges live)")
+      e.join(support(e), Seq("u", "v")).select(col("u"), col("v"), col("support"))
     }
-    require(n == prev || n == 0,
-      s"kTruss did not converge in $maxRounds rounds ($n edges live)")
-    e.join(support(e), Seq("u", "v")).select(col("u"), col("v"), col("support"))
   }
 
   /** Driver-side k-truss twin for sub-threshold graphs: identical
     * monotone prune fixpoint via neighbor-set intersections.
     */
-  private def localKTruss(spark: SparkSession, undirected: DataFrame, k: Int): DataFrame = {
+  private def localKTruss(spark: SparkSession, undirected: Array[(Long, Long)], k: Int): DataFrame = {
     import spark.implicits._
     def supportOf(es: Seq[(Long, Long)]): Map[(Long, Long), Long] = {
       val adj = es.flatMap { case (u, v) => Seq(u -> v, v -> u) }
         .groupBy(_._1).map { case (x, ps) => x -> ps.map(_._2).toSet }
       es.map { case (u, v) => (u, v) -> (adj(u) & adj(v)).size.toLong }.toMap
     }
-    var es: Seq[(Long, Long)] = collectPairs(undirected).toSeq
+    var es: Seq[(Long, Long)] = undirected.toSeq
     var changed = true
     while (changed && es.nonEmpty) {
       val sup = supportOf(es)
@@ -1480,29 +1510,22 @@ object GraphOps {
     * formulation; the wedge join is the only heavy stage.
     */
   def triangleCounts(edges: DataFrame,
-      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val u = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (u.count() <= maxLocalEdges) {
-      val out = localTriangles(edges.sparkSession, u)
-      u.unpersist()
-      return out
+      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
+    twin(undirectedSimple(edges, "a", "b"), maxLocalEdges, Some(StorageLevel.MEMORY_AND_DISK))(
+        rows => localTriangles(edges.sparkSession, pairs(rows))) { (u, _) =>
+      val tri = u.as("x")
+        .join(u.as("y"), col("y.a") === col("x.b"))
+        .join(u.as("z"), col("z.a") === col("x.a") && col("z.b") === col("y.b"))
+        .select(col("x.a").as("a"), col("x.b").as("b"), col("y.b").as("c"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val counts = tri.select(col("a").as("vertex"))
+        .unionAll(tri.select(col("b")))
+        .unionAll(tri.select(col("c")))
+        .groupBy("vertex").agg(count(lit(1)).as("n_tri"))
+      val out = counts.localCheckpoint()
+      tri.unpersist(); u.unpersist()
+      out
     }
-    val tri = u.as("x")
-      .join(u.as("y"), col("y.a") === col("x.b"))
-      .join(u.as("z"), col("z.a") === col("x.a") && col("z.b") === col("y.b"))
-      .select(col("x.a").as("a"), col("x.b").as("b"), col("y.b").as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val counts = tri.select(col("a").as("vertex"))
-      .unionAll(tri.select(col("b")))
-      .unionAll(tri.select(col("c")))
-      .groupBy("vertex").agg(count(lit(1)).as("n_tri"))
-    val out = counts.localCheckpoint()
-    tri.unpersist(); u.unpersist()
-    out
-  }
 
   /** Local clustering coefficient per vertex of the undirected simple
     * graph: cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) with deg(v) the
@@ -1513,9 +1536,7 @@ object GraphOps {
     * integer counts, so values are engine-exact at 6 dp.
     */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val u = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
+    val u = undirectedSimple(edges, "a", "b").localCheckpoint()
     val deg = u.select(col("a").as("vertex")).unionAll(u.select(col("b")))
       .groupBy("vertex").agg(count(lit(1)).as("deg"))
     val tri = triangleCounts(u.select(col("a").as("src"), col("b").as("dst")))
@@ -1611,9 +1632,7 @@ object GraphOps {
     * folded into the plan as a literal.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val u = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
+    val u = undirectedSimple(edges, "a", "b").localCheckpoint()
     val m = u.count()
     val lab = labels.select(col("vertex"), col("community")).localCheckpoint()
     val deg = u.select(col("a").as("vertex")).unionAll(u.select(col("b")))
@@ -1660,77 +1679,75 @@ object GraphOps {
       maxRounds: Int = 64): DataFrame = {
     val ce = canonEdges(edges).where(col("src") =!= col("dst"))
       .distinct().localCheckpoint()
-    val verts = ce.select(col("src").as("v")).unionAll(ce.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    if (ce.count() <= maxLocalEdges) return localScc(edges.sparkSession, ce, verts)
-
-    // label(v) ← min id with a directed path to v (following `dir`)
-    def minReach(e: DataFrame, vs: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-      var lab = vs.withColumn("lab", col("v"))
-      var changed = true
-      while (changed) {
-        val pushed = e.join(lab.withColumnRenamed("v", srcCol), srcCol)
-          .groupBy(col(dstCol).as("v")).agg(min(col("lab")).as("plab"))
-        val next = lab.join(pushed, Seq("v"), "left")
-          .select(col("v"), least(col("lab"), coalesce(col("plab"), col("lab"))).as("lab"))
-          .localCheckpoint()
-        changed = next.join(lab.withColumnRenamed("lab", "old"), "v")
-          .where(col("lab") =!= col("old")).limit(1).count() > 0
-        lab = next
+    val verts = vertexSet(ce).localCheckpoint()
+    twin(ce, maxLocalEdges)(rows => localScc(edges.sparkSession, pairs(rows), verts)) { (_, _) =>
+      // label(v) ← min id with a directed path to v (following `dir`)
+      def minReach(e: DataFrame, vs: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+        var lab = vs.withColumn("lab", col("v"))
+        var changed = true
+        while (changed) {
+          val pushed = e.join(lab.withColumnRenamed("v", srcCol), srcCol)
+            .groupBy(col(dstCol).as("v")).agg(min(col("lab")).as("plab"))
+          val next = lab.join(pushed, Seq("v"), "left")
+            .select(col("v"), least(col("lab"), coalesce(col("plab"), col("lab"))).as("lab"))
+            .localCheckpoint()
+          changed = next.join(lab.withColumnRenamed("lab", "old"), "v")
+            .where(col("lab") =!= col("old")).limit(1).count() > 0
+          lab = next
+        }
+        lab
       }
-      lab
-    }
 
-    val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // class of v = (cf, cb), refined each round; one initial class
-    var cls = verts.select(col("v"), lit(0L).as("cf"), lit(0L).as("cb"))
-    var e = ce
-    var remaining = verts.count()
-    var rounds = 0
-    while (remaining > 0 && rounds < maxRounds) {
-      rounds += 1
-      // restrict edges to within-class: labels must not cross class
-      // borders. New classes refine old ones, so the restricted edge
-      // set from the previous round can be reused as the input here.
-      val eC = e
-        .join(cls.select(col("v").as("src"), col("cf").as("f1"), col("cb").as("b1")), "src")
-        .join(cls.select(col("v").as("dst"), col("cf").as("f2"), col("cb").as("b2")), "dst")
-        .where(col("f1") === col("f2") && col("b1") === col("b2"))
-        .select("src", "dst").localCheckpoint()
-      val vs = cls.select("v")
-      val fwd = minReach(eC, vs, "src", "dst")
-      val bwd = minReach(eC, vs, "dst", "src")
-      val both = fwd.join(bwd.withColumnRenamed("lab", "blab"), "v").localCheckpoint()
-      out += both.where(col("lab") === col("blab"))
-        .select(col("v").as("vertex"), col("lab").as("scc"))
-      cls = both.where(col("lab") =!= col("blab"))
-        .select(col("v"), col("lab").as("cf"), col("blab").as("cb"))
-        .localCheckpoint()
-      remaining = cls.count()
-      e = eC
+      val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      // class of v = (cf, cb), refined each round; one initial class
+      var cls = verts.select(col("v"), lit(0L).as("cf"), lit(0L).as("cb"))
+      var e = ce
+      var remaining = verts.count()
+      var rounds = 0
+      while (remaining > 0 && rounds < maxRounds) {
+        rounds += 1
+        // restrict edges to within-class: labels must not cross class
+        // borders. New classes refine old ones, so the restricted edge
+        // set from the previous round can be reused as the input here.
+        val eC = e
+          .join(cls.select(col("v").as("src"), col("cf").as("f1"), col("cb").as("b1")), "src")
+          .join(cls.select(col("v").as("dst"), col("cf").as("f2"), col("cb").as("b2")), "dst")
+          .where(col("f1") === col("f2") && col("b1") === col("b2"))
+          .select("src", "dst").localCheckpoint()
+        val vs = cls.select("v")
+        val fwd = minReach(eC, vs, "src", "dst")
+        val bwd = minReach(eC, vs, "dst", "src")
+        val both = fwd.join(bwd.withColumnRenamed("lab", "blab"), "v").localCheckpoint()
+        out += both.where(col("lab") === col("blab"))
+          .select(col("v").as("vertex"), col("lab").as("scc"))
+        cls = both.where(col("lab") =!= col("blab"))
+          .select(col("v"), col("lab").as("cf"), col("blab").as("cb"))
+          .localCheckpoint()
+        remaining = cls.count()
+        e = eC
+      }
+      if (remaining > 0) {
+        // adversarial-depth fallback: the remainder is a strict
+        // refinement maxRounds deep — run it on the driver if it fits
+        val remEdges = e
+          .join(cls.select(col("v").as("src")), Seq("src"), "left_semi")
+          .join(cls.select(col("v").as("dst")), Seq("dst"), "left_semi")
+          .localCheckpoint()
+        require(remEdges.count() <= maxLocalEdges,
+          s"scc: $remaining vertices unresolved after $maxRounds refinement rounds " +
+            "and the remainder exceeds the driver fallback threshold")
+        out += localScc(edges.sparkSession, collectPairs(remEdges), cls.select(col("v")))
+      }
+      out.reduce(_ unionAll _)
     }
-    if (remaining > 0) {
-      // adversarial-depth fallback: the remainder is a strict
-      // refinement maxRounds deep — run it on the driver if it fits
-      val remEdges = e
-        .join(cls.select(col("v").as("src")), Seq("src"), "left_semi")
-        .join(cls.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint()
-      require(remEdges.count() <= maxLocalEdges,
-        s"scc: $remaining vertices unresolved after $maxRounds refinement rounds " +
-          "and the remainder exceeds the driver fallback threshold")
-      out += localScc(edges.sparkSession, remEdges, cls.select(col("v")))
-    }
-    out.reduce(_ unionAll _)
   }
 
   /** Driver-side Kosaraju twin for sub-threshold graphs: two iterative
     * DFS passes (finish order on G, assignment on Gᵀ), components
     * relabeled by their minimum vertex id.
     */
-  private def localScc(spark: SparkSession, e: DataFrame, verts: DataFrame): DataFrame = {
+  private def localScc(spark: SparkSession, es: Array[(Long, Long)], verts: DataFrame): DataFrame = {
     import spark.implicits._
-    val es = collectPairs(e)
     val vs = verts.collect().map(_.getLong(0)).sorted
     val adj = adjacencyOf(es)
     val radj = adjacencyOf(es.map(_.swap))
@@ -1842,7 +1859,7 @@ object GraphOps {
     import spark.implicits._
     val m = 1 << p
     val e = canonEdges(edges).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v"))).distinct()
+    val verts = vertexSet(e)
     var st = verts.as[Long].map { v =>
       val regs = new Array[Byte](m)
       val h = splitmix64(v)
@@ -1911,9 +1928,7 @@ object GraphOps {
     */
   private def allSourcesExact(edges: DataFrame): DataFrame = {
     val e = canonEdges(edges).localCheckpoint()
-    val sources = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct()
-      .select(col("v").as("vertex"), col("v").as("tag"))
+    val sources = vertexSet(e).select(col("v").as("vertex"), col("v").as("tag"))
     bfs(e, sources)
       .groupBy(col("tag").as("vertex"))
       .agg(count(lit(1)).as("n_reached"), sum(col("level")).as("sum_dist"),
@@ -1928,8 +1943,7 @@ object GraphOps {
     */
   def closeness(edges: DataFrame, maxExactVerts: Long = ExactAllSourcesVerts): DataFrame = {
     val e = canonEdges(edges).localCheckpoint()
-    val nv = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().count()
+    val nv = vertexSet(e).count()
     if (nv <= maxExactVerts)
       allSourcesExact(e)
         .select(col("vertex"), col("n_reached"),
@@ -1951,8 +1965,7 @@ object GraphOps {
     */
   def eccentricity(edges: DataFrame, maxExactVerts: Long = ExactAllSourcesVerts): DataFrame = {
     val e = canonEdges(edges).localCheckpoint()
-    val nv = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().count()
+    val nv = vertexSet(e).count()
     if (nv <= maxExactVerts)
       allSourcesExact(e).select(col("vertex"), col("n_reached"), col("ecc"))
     else
@@ -1974,11 +1987,9 @@ object GraphOps {
     */
   def harmonic(edges: DataFrame, maxExactVerts: Long = ExactAllSourcesVerts): DataFrame = {
     val e = canonEdges(edges).localCheckpoint()
-    val nv = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().count()
+    val nv = vertexSet(e).count()
     if (nv <= maxExactVerts) {
-      val sources = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-        .distinct().select(col("v").as("vertex"), col("v").as("tag"))
+      val sources = vertexSet(e).select(col("v").as("vertex"), col("v").as("tag"))
       val lv = bfs(e, sources)
         .groupBy(col("tag"), col("level")).agg(count(lit(1)).as("cnt"))
         .localCheckpoint()
@@ -2011,29 +2022,29 @@ object GraphOps {
       .select(col("src").as("a"), col("dst").as("b"))
       .unionAll(ce.select(col("dst"), col("src")))
       .where(col("a") =!= col("b")).distinct().localCheckpoint()
-    if (und.count() <= maxLocalEdges)
-      return localLpa(edges.sparkSession, und, iters)
-    val verts = und.select(col("a").as("v")).distinct().localCheckpoint()
-    var labels = verts.withColumn("lab", col("v"))
-    for (_ <- 1 to iters) {
-      val counts = und
-        .join(labels.withColumnRenamed("v", "b"), "b")
-        .groupBy(col("a").as("v"), col("lab")).agg(count(lit(1)).as("c"))
-      // top-1 by (count desc, label asc) via max on a packed struct —
-      // one aggregation, no window sort
-      labels = counts
-        .groupBy("v")
-        .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("v"), (-col("m.nl")).as("lab"))
-        .localCheckpoint()
+    twin(und, maxLocalEdges)(rows => localLpa(edges.sparkSession, pairs(rows), iters)) { (_, _) =>
+      val verts = und.select(col("a").as("v")).distinct().localCheckpoint()
+      var labels = verts.withColumn("lab", col("v"))
+      for (_ <- 1 to iters) {
+        val counts = und
+          .join(labels.withColumnRenamed("v", "b"), "b")
+          .groupBy(col("a").as("v"), col("lab")).agg(count(lit(1)).as("c"))
+        // top-1 by (count desc, label asc) via max on a packed struct —
+        // one aggregation, no window sort
+        labels = counts
+          .groupBy("v")
+          .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
+          .select(col("v"), (-col("m.nl")).as("lab"))
+          .localCheckpoint()
+      }
+      labels.select(col("v").as("vertex"), col("lab").as("community"))
     }
-    labels.select(col("v").as("vertex"), col("lab").as("community"))
   }
 
   /** Driver-side sync-LPA twin for sub-threshold graphs. */
-  private def localLpa(spark: SparkSession, und: DataFrame, iters: Int): DataFrame = {
+  private def localLpa(spark: SparkSession, und: Array[(Long, Long)], iters: Int): DataFrame = {
     import spark.implicits._
-    val adj = adjacencyOf(collectPairs(und))
+    val adj = adjacencyOf(und)
     import scala.jdk.CollectionConverters._
     val verts = adj.keySet().asScala.toArray.sorted
     var lab = new java.util.HashMap[Long, Long]()
@@ -2066,82 +2077,76 @@ object GraphOps {
     */
   def hits(edges: DataFrame, iters: Int,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    // Born hash-partitioned by src (one exchange, see [[pagerank]]).
-    val e = canonEdges(edges).repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localHits(edges.sparkSession, e, iters)
-      e.unpersist()
-      return out
-    }
-    // The hub half-step joins on dst, so a by-dst copy makes BOTH
-    // half-steps exchange-free on the edge side — the star-rounds
-    // pattern: 2× edge cache buys away 2×iters full-edge exchanges,
-    // leaving only the vertex-sized score frames shuffling per step.
-    // The copy is DISK_ONLY (r13): each half-step reads it exactly
-    // once sequentially, so disk residency costs one scan — never an
-    // exchange — and the loop family's MEMORY cache footprint stays
-    // one edges-sized frame instead of pressure-evicting neighbors on
-    // tight executors. Both caches release before the final joins.
-    val eByDst = e.repartition(col("dst")).persist(StorageLevel.DISK_ONLY)
-    eByDst.count()
-    audit("hits:eByDst:DISK_ONLY")
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    // Power-law skew splits BOTH directions (same [[hubSplit]] layout
-    // as pagerank): out-degree hubs straggle the authority step's
-    // by-src partition, IN-degree hubs the hub step's by-dst
-    // partition. Auto threshold ⇒ no-op on every shipped graph.
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val srcSplit = hubSplit(e, eCount, outdeg, hubOutDegree)
-    val indeg = eByDst.groupBy("dst").agg(count(lit(1)).as("od"))
-    val dstSplit = hubSplit(eByDst, eCount, indeg, hubOutDegree,
-      key = "dst", tailLevel = StorageLevel.DISK_ONLY)
-    var h = verts.withColumn("s", lit(1.0))
-    var a = h
-    def halfStep(scores: DataFrame, inCol: String, outCol: String): DataFrame = {
-      val split = if (inCol == "src") srcSplit else dstSplit
-      val tailRows = split.tail.join(scores.withColumnRenamed("v", inCol), inCol)
-        .select(col(outCol).as("v"), col("s"))
-      val rows = split.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubScores = scores
-            .join(broadcast(split.hubDeg.get
-              .withColumnRenamed(inCol, "v").select("v")), "v")
-            .withColumnRenamed("v", inCol)
-          tailRows.unionAll(
-            hubE.join(broadcast(hubScores), inCol)
-              .select(col(outCol).as("v"), col("s")))
+    // Born hash-partitioned by src (one exchange, see [[pushRank]]).
+    val born = canonEdges(edges).repartition(col("src")).distinct()
+    twin(born, maxLocalEdges, Some(StorageLevel.MEMORY_AND_DISK))(
+        rows => localHits(edges.sparkSession, pairs(rows), iters)) { (e, eCount) =>
+      // The hub half-step joins on dst, so a by-dst copy makes BOTH
+      // half-steps exchange-free on the edge side — the star-rounds
+      // pattern: 2× edge cache buys away 2×iters full-edge exchanges,
+      // leaving only the vertex-sized score frames shuffling per step.
+      // The copy is DISK_ONLY (r13): each half-step reads it exactly
+      // once sequentially, so disk residency costs one scan — never an
+      // exchange — and the loop family's MEMORY cache footprint stays
+      // one edges-sized frame instead of pressure-evicting neighbors on
+      // tight executors. Both caches release before the final joins.
+      val eByDst = e.repartition(col("dst")).persist(StorageLevel.DISK_ONLY)
+      eByDst.count()
+      audit("hits:eByDst:DISK_ONLY")
+      val verts = vertexSet(e).localCheckpoint()
+      // Power-law skew splits BOTH directions (same [[hubSplit]] layout
+      // as pagerank): out-degree hubs straggle the authority step's
+      // by-src partition, IN-degree hubs the hub step's by-dst
+      // partition. Auto threshold ⇒ no-op on every shipped graph.
+      val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
+      val srcSplit = hubSplit(e, eCount, outdeg, hubOutDegree)
+      val indeg = eByDst.groupBy("dst").agg(count(lit(1)).as("od"))
+      val dstSplit = hubSplit(eByDst, eCount, indeg, hubOutDegree,
+        key = "dst", tailLevel = StorageLevel.DISK_ONLY)
+      var h = verts.withColumn("s", lit(1.0))
+      var a = h
+      def halfStep(scores: DataFrame, inCol: String, outCol: String): DataFrame = {
+        val split = if (inCol == "src") srcSplit else dstSplit
+        val tailRows = split.tail.join(scores.withColumnRenamed("v", inCol), inCol)
+          .select(col(outCol).as("v"), col("s"))
+        val rows = split.hub match {
+          case None => tailRows
+          case Some(hubE) =>
+            val hubScores = scores
+              .join(broadcast(split.hubDeg.get
+                .withColumnRenamed(inCol, "v").select("v")), "v")
+              .withColumnRenamed("v", inCol)
+            tailRows.unionAll(
+              hubE.join(broadcast(hubScores), inCol)
+                .select(col(outCol).as("v"), col("s")))
+        }
+        val pushed = rows.groupBy("v").agg(sum(col("s")).as("x"))
+        val raw = verts.join(pushed, Seq("v"), "left")
+          .select(col("v"), coalesce(col("x"), lit(0.0)).as("x"))
+          .localCheckpoint()
+        val tot = raw.agg(sum(col("x"))).head().getDouble(0)
+        raw.select(col("v"), (col("x") / tot).as("s"))
       }
-      val pushed = rows.groupBy("v").agg(sum(col("s")).as("x"))
-      val raw = verts.join(pushed, Seq("v"), "left")
-        .select(col("v"), coalesce(col("x"), lit(0.0)).as("x"))
-        .localCheckpoint()
-      val tot = raw.agg(sum(col("x"))).head().getDouble(0)
-      raw.select(col("v"), (col("x") / tot).as("s"))
+      for (_ <- 1 to iters) {
+        a = halfStep(h, "src", "dst") // authority ← in-edge hub mass
+        h = halfStep(a, "dst", "src") // hub ← out-edge authority mass
+      }
+      // halfStep localCheckpoints each score frame, so the edge caches
+      // are no longer needed for the final join — release them here (the
+      // local path above unpersists too; leaving them cached leaks
+      // blocks across bench iterations).
+      srcSplit.unpersistAll(); dstSplit.unpersistAll()
+      verts.join(a.withColumnRenamed("s", "authority"), "v")
+        .join(h.withColumnRenamed("s", "hub"), "v")
+        .select(col("v").as("vertex"), col("authority"), col("hub"))
     }
-    for (_ <- 1 to iters) {
-      a = halfStep(h, "src", "dst") // authority ← in-edge hub mass
-      h = halfStep(a, "dst", "src") // hub ← out-edge authority mass
-    }
-    // halfStep localCheckpoints each score frame, so the edge caches
-    // are no longer needed for the final join — release them here (the
-    // local path above unpersists too; leaving them cached leaks
-    // blocks across bench iterations).
-    srcSplit.unpersistAll(); dstSplit.unpersistAll()
-    verts.join(a.withColumnRenamed("s", "authority"), "v")
-      .join(h.withColumnRenamed("s", "hub"), "v")
-      .select(col("v").as("vertex"), col("authority"), col("hub"))
   }
 
   /** Driver-side HITS twin for sub-threshold graphs: identical
     * half-step/normalize schedule.
     */
-  private def localHits(spark: SparkSession, e: DataFrame, iters: Int): DataFrame = {
+  private def localHits(spark: SparkSession, es: Array[(Long, Long)], iters: Int): DataFrame = {
     import spark.implicits._
-    val es = collectPairs(e)
     val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
     var h = verts.map(_ -> 1.0).toMap
     var a = h
@@ -2190,9 +2195,8 @@ object GraphOps {
   /** Driver-side triangle-count twin for sub-threshold graphs: oriented
     * higher-neighbor intersection, each triangle a<b<c counted once.
     */
-  private def localTriangles(spark: SparkSession, u: DataFrame): DataFrame = {
+  private def localTriangles(spark: SparkSession, es: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val es = collectPairs(u)
     val up = new java.util.HashMap[Long, scala.collection.mutable.TreeSet[Long]]()
     es.foreach { case (a, b) =>
       up.computeIfAbsent(a, _ => scala.collection.mutable.TreeSet.empty[Long]) += b
@@ -2312,8 +2316,7 @@ object GraphOps {
     val spark = edges.sparkSession
     val e = canonEdges(edges).where(col("src") =!= col("dst"))
       .distinct().localCheckpoint()
-    val verts = e.select(col("src").as("v"))
-      .unionAll(e.select(col("dst").as("v"))).distinct().localCheckpoint()
+    val verts = vertexSet(e).localCheckpoint()
     val nv = verts.count()
     // source list is driver-state by design: ≤ maxExactVerts ids when
     // exact, ≤ sampleSources when sampled — never corpus-sized
@@ -2323,9 +2326,8 @@ object GraphOps {
         .orderBy(xxhash64(lit(BetweennessPivotSeed), col("v")), col("v"))
         .limit(sampleSources).collect().map(_.getLong(0))
     val scale = nv.toDouble / srcArr.length
-    val dep =
-      if (e.count() <= maxLocalEdges) localBrandes(spark, collectPairs(e), srcArr)
-      else distBrandes(e, srcArr, hubOutDegree)
+    val dep = twin(e, maxLocalEdges)(rows => localBrandes(spark, pairs(rows), srcArr))(
+      distBrandes(_, _, srcArr, hubOutDegree))
     verts.join(dep, verts("v") === dep("vertex"), "left")
       .select(verts("v").as("vertex"),
         round(coalesce(col("dep"), lit(0.0)) * lit(scale), 6).as("betweenness"),
@@ -2388,73 +2390,21 @@ object GraphOps {
     * at a time over the SAME per-level checkpointed frames: each
     * backward step joins level-(l+1) vertices carrying
     * (1+δ)/σ against reversed edges and multiplies into level-l σ.
-    * Geometry per direction mirrors [[bfs]]: broadcast-sized frontiers
-    * join the cached edge frame shuffle-free; the first
-    * super-broadcast level re-persists edges hash-partitioned on the
-    * join side (src forward / dst backward — the [[hits]] twin-cache
-    * trade), after which only frontier-sized frames move per level.
-    * Driver state: nothing but loop counters.
+    * Both directions join through one [[FrontierEdges]] layout, keyed
+    * src forward and dst backward (the [[hits]] twin-cache trade), so
+    * after the first super-broadcast level of a direction only
+    * frontier-sized frames move per level. Driver state: nothing but
+    * loop counters.
     */
-  private def distBrandes(e0: DataFrame, sources: Array[Long],
-      hubOutDegree: Long = 0L): DataFrame = {
+  private def distBrandes(e0: DataFrame, eCount: Long, sources: Array[Long],
+      hubOutDegree: Long): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
     val e = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    var srcSplit: HubSplit = null
-    var dstSplit: HubSplit = null
-    def bySrc(): HubSplit = {
-      if (srcSplit == null) {
-        val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-        eBySrc.count()
-        val od = eBySrc.groupBy("src").agg(count(lit(1)).as("od"))
-        srcSplit = hubSplit(eBySrc, eCount, od, hubOutDegree,
-          releaseOnError = Seq(e))
-        audit("brandes:eBySrc:MEMORY_AND_DISK")
-      }
-      srcSplit
-    }
-    // The backward copy is DISK_ONLY like [[hits]]'s: one sequential
-    // read per level, and the sweep's memory footprint stays one
-    // edges-sized frame (`e`) after the forward copy is released.
-    // Both copies get the [[hubSplit]] peel on their own join key
-    // (out-degree forward, IN-degree backward).
-    def byDst(): HubSplit = {
-      if (dstSplit == null) {
-        val eByDst = e.repartition(col("dst")).persist(StorageLevel.DISK_ONLY)
-        eByDst.count()
-        val ind = eByDst.groupBy("dst").agg(count(lit(1)).as("od"))
-        dstSplit = hubSplit(eByDst, eCount, ind, hubOutDegree,
-          key = "dst", tailLevel = StorageLevel.DISK_ONLY,
-          releaseOnError = Seq(e))
-        audit("brandes:eByDst:DISK_ONLY")
-      }
-      dstSplit
-    }
-    // frontier×edges rows over whichever layout exists, keyed by the
-    // direction's join column (src forward, dst backward); probeKey is
-    // the frontier column the edges key matches
-    def expand(f: DataFrame, broadcastSide: Boolean, forward: Boolean,
-        probeKey: String, project: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-      val key = if (forward) "src" else "dst"
-      val built = if (forward) srcSplit else dstSplit
-      if (built == null && broadcastSide) {
-        val fb = broadcast(f)
-        return project(e.join(fb, e(key) === fb(probeKey)), fb)
-      }
-      val hs = if (forward) bySrc() else byDst()
-      val fb = if (broadcastSide) broadcast(f) else f
-      val tailRows = project(hs.tail.join(fb, hs.tail(key) === fb(probeKey)), fb)
-      hs.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubF = broadcast(f.join(
-            broadcast(hs.hubDeg.get.select(col(key).as(probeKey))),
-            Seq(probeKey), "left_semi"))
-          tailRows.unionAll(
-            project(hubE.join(hubF, hubE(key) === hubF(probeKey)), hubF))
-      }
-    }
+    // forward joins the by-src side, the backward sweep the by-dst side
+    // (out-degree hubs forward, IN-degree hubs backward); `e` serves
+    // the broadcast-sized levels of both directions until the end
+    val layout = new FrontierEdges(e, eCount, hubOutDegree, "brandes", releaseBase = false)
     // forward: levels(l) = (tag, vertex, sigma) checkpointed per level
     var frontier = sources.toSeq.toDF("tag")
       .select(col("tag"), col("tag").as("vertex"), lit(1.0).as("sigma"))
@@ -2469,7 +2419,7 @@ object GraphOps {
     while (rows > 0) {
       val visited = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
       val small = rows <= broadcastFrontier
-      val nextRaw = expand(frontier, small, forward = true, probeKey = "vertex",
+      val nextRaw = layout.expand(frontier, small, "src", "vertex",
           (j, _) => j.select(col("tag"), col("dst").as("vertex"), col("sigma")))
         .groupBy("tag", "vertex").agg(sum("sigma").as("sigma"))
         .join(visited, Seq("tag", "vertex"), "left_anti")
@@ -2494,11 +2444,7 @@ object GraphOps {
     // dst only — so release it BEFORE the backward loop (r13): the
     // sweep's cache peak is one memory edges frame + the disk-resident
     // by-dst copy, not three edges-sized frames.
-    if (srcSplit != null) {
-      srcSplit.unpersistAll()
-      srcSplit = null
-      audit("brandes:eBySrc:released")
-    }
+    layout.release("src")
     audit("brandes:backward:start")
     val maxLev = levels.size - 1
     var delta = levels(maxLev)
@@ -2511,7 +2457,7 @@ object GraphOps {
         .select(col("tag"), col("vertex").as("w"),
           ((lit(1.0) + col("delta")) / col("sigma")).as("m"))
       val small = levelRows(l + 1) <= broadcastFrontier
-      val contrib = expand(wd, small, forward = false, probeKey = "w",
+      val contrib = layout.expand(wd, small, "dst", "w",
           (j, _) => j.select(col("tag"), col("src").as("vertex"), col("m")))
         .groupBy("tag", "vertex").agg(sum("m").as("msum"))
       val dRaw = levels(l).join(contrib, Seq("tag", "vertex"), "left")
@@ -2522,9 +2468,7 @@ object GraphOps {
       deltaFrames += delta
       l -= 1
     }
-    e.unpersist()
-    if (srcSplit != null) srcSplit.unpersistAll()
-    if (dstSplit != null) dstSplit.unpersistAll()
+    layout.releaseAll()
     deltaFrames.reduce(_ unionAll _)
       .where(col("vertex") =!= col("tag"))
       .groupBy("vertex").agg(sum("delta").as("dep"))
@@ -2562,94 +2506,57 @@ object GraphOps {
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("long").as("src"),
+    val weighted = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localDijkstra(spark, e, source)
-      e.unpersist()
-      return out
-    }
-    var dist = Seq((source, 0L)).toDF("vertex", "dist")
-      .repartition(col("vertex")).localCheckpoint()
-    var frontier = dist
-    var frontierRows = 1L
-    // Same lazily-built partitioned layout as the BFS loop, with the
-    // same [[hubSplit]] hub peel: past the broadcast bound only the
-    // frontier shuffles per round, and a power-law source's edges are
-    // relaxed by every partition (broadcast of the frontier's hub
-    // slice) instead of one straggler task.
-    var eSplit: HubSplit = null
-    def partitionedSplit(): HubSplit = {
-      if (eSplit == null) {
-        val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-        eBySrc.count()
-        val od = eBySrc.groupBy("src").agg(count(lit(1)).as("od"))
-        eSplit = hubSplit(eBySrc, eCount, od, hubOutDegree,
-          releaseOnError = Seq(e))
-        e.unpersist()
+    twin(weighted, maxLocalEdges, Some(StorageLevel.MEMORY_AND_DISK))(
+        localDijkstra(spark, _, source)) { (e, eCount) =>
+      var dist = Seq((source, 0L)).toDF("vertex", "dist")
+        .repartition(col("vertex")).localCheckpoint()
+      var frontier = dist
+      var frontierRows = 1L
+      // The BFS loop's frontier layout: past the broadcast bound only
+      // the frontier shuffles per round, and a power-law source's edges
+      // are relaxed by every partition (broadcast of the frontier's hub
+      // slice) instead of one straggler task.
+      val layout = new FrontierEdges(e, eCount, hubOutDegree, "sssp", releaseBase = true)
+      val roundCap = ssspRoundCap(maxRounds, eCount)
+      var round = 0L
+      while (frontierRows > 0 && round < roundCap) {
+        round += 1
+        val small = frontierRows <= broadcastFrontier
+        val cand = layout.expand(frontier, small, "src", "vertex",
+            (j, f) => j.select(col("dst").as("vertex"), (f("dist") + col("w")).as("nd")))
+          .groupBy("vertex").agg(min("nd").as("nd"))
+        // dist is hash(vertex)-partitioned (repartition at birth, then
+        // each round's merge retains the join partitioning through the
+        // checkpoint), and cand leaves its aggregate hash(vertex)-
+        // partitioned too — the full-outer merge plans exchange-free.
+        val merged = dist.join(cand, Seq("vertex"), "full_outer")
+          .select(col("vertex"),
+            least(coalesce(col("dist"), col("nd")),
+              coalesce(col("nd"), col("dist"))).as("dist"),
+            (col("nd").isNotNull &&
+              (col("dist").isNull || col("nd") < col("dist"))).as("improved"))
+          .localCheckpoint()
+        // The frontier is a filter over the merged checkpoint's cached
+        // blocks — no second job.
+        frontier = merged.where(col("improved")).select("vertex", "dist")
+        frontierRows = frontier.count()
+        dist = merged.select("vertex", "dist")
+        trace(s"GRAFT_SSSP round=$round improved=$frontierRows")
       }
-      eSplit
+      layout.releaseAll()
+      // Mirror scc's contract: an exhausted round budget with a live
+      // frontier means the returned distances are NOT final — fail
+      // loudly rather than emit silently-wrong output (bfs's precedent
+      // is an unbounded default; sssp's bound exists only to cap a
+      // pathological toll chain, so hitting it is an error, not a
+      // result).
+      require(frontierRows == 0,
+        s"sssp: frontier still has $frontierRows improvable vertices after " +
+          s"$roundCap rounds — distances not converged; raise maxRounds")
+      dist
     }
-    // frontier×edges candidate rows for one round over whichever
-    // layout exists (mirrors the BFS expand)
-    def relaxed(f: DataFrame, broadcastSide: Boolean): DataFrame = {
-      if (eSplit == null && broadcastSide)
-        return e.join(broadcast(f), e("src") === f("vertex"))
-          .select(col("dst").as("vertex"), (f("dist") + col("w")).as("nd"))
-      val hs = partitionedSplit()
-      val fb = if (broadcastSide) broadcast(f) else f
-      val tailRows = hs.tail.join(fb, hs.tail("src") === fb("vertex"))
-        .select(col("dst").as("vertex"), (fb("dist") + col("w")).as("nd"))
-      hs.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubF = broadcast(f.join(
-            broadcast(hs.hubDeg.get.select(col("src").as("vertex"))),
-            Seq("vertex"), "left_semi"))
-          tailRows.unionAll(
-            hubE.join(hubF, hubE("src") === hubF("vertex"))
-              .select(col("dst").as("vertex"), (hubF("dist") + col("w")).as("nd")))
-      }
-    }
-    val roundCap = ssspRoundCap(maxRounds, eCount)
-    var round = 0L
-    while (frontierRows > 0 && round < roundCap) {
-      round += 1
-      val small = frontierRows <= broadcastFrontier
-      val cand = relaxed(frontier, small)
-        .groupBy("vertex").agg(min("nd").as("nd"))
-      // dist is hash(vertex)-partitioned (repartition at birth, then
-      // each round's merge retains the join partitioning through the
-      // checkpoint), and cand leaves its aggregate hash(vertex)-
-      // partitioned too — the full-outer merge plans exchange-free.
-      val merged = dist.join(cand, Seq("vertex"), "full_outer")
-        .select(col("vertex"),
-          least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"),
-          (col("nd").isNotNull &&
-            (col("dist").isNull || col("nd") < col("dist"))).as("improved"))
-        .localCheckpoint()
-      // The frontier is a filter over the merged checkpoint's cached
-      // blocks — no second job.
-      frontier = merged.where(col("improved")).select("vertex", "dist")
-      frontierRows = frontier.count()
-      dist = merged.select("vertex", "dist")
-      if (sys.env.contains("GRAFT_GRAPH_TRACE"))
-        System.err.println(s"GRAFT_SSSP round=$round improved=$frontierRows")
-    }
-    e.unpersist()
-    if (eSplit != null) eSplit.unpersistAll()
-    // Mirror scc's contract: an exhausted round budget with a live
-    // frontier means the returned distances are NOT final — fail loudly
-    // rather than emit silently-wrong output (bfs's precedent is an
-    // unbounded default; sssp's bound exists only to cap a pathological
-    // toll chain, so hitting it is an error, not a result).
-    require(frontierRows == 0,
-      s"sssp: frontier still has $frontierRows improvable vertices after " +
-        s"$roundCap rounds — distances not converged; raise maxRounds")
-    dist
   }
 
   /** The sssp round budget as a pure function of (caller request,
@@ -2684,86 +2591,81 @@ object GraphOps {
   def msf(edges: DataFrame, maxRounds: Int = 64,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     val spark = edges.sparkSession
-    val ue = edges.select(
+    val minToll = edges.select(
       least(col("src"), col("dst")).cast("long").as("a"),
       greatest(col("src"), col("dst")).cast("long").as("b"),
       col("w").cast("long").as("w"))
       .where(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min("w").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ueCount = ue.count()
-    if (ueCount <= maxLocalEdges) {
-      val out = localKruskal(spark, ue)
-      ue.unpersist()
-      return out
-    }
-    // comp: (vertex, comp) — every vertex starts as its own component.
-    var comp = ue.select(col("a").as("vertex"))
-      .unionAll(ue.select(col("b").as("vertex"))).distinct()
-      .select(col("vertex"), col("vertex").as("comp"))
-      .repartition(col("vertex")).localCheckpoint()
-    var live = ue
-    val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    var liveRows = ueCount
-    while (liveRows > 0 && round < maxRounds) {
-      round += 1
-      // relabel both endpoints, keep cross-component edges only
-      val ca = comp.select(col("vertex").as("a"), col("comp").as("cu"))
-      val cb = comp.select(col("vertex").as("b"), col("comp").as("cv"))
-      val e2 = live.join(ca, "a").join(cb, "b")
-        .where(col("cu") =!= col("cv"))
-        .localCheckpoint()
-      liveRows = e2.count()
-      if (liveRows > 0) {
-        // each component nominates its (w, a, b)-minimum incident edge
-        val cand = e2.select(col("cu").as("c"), col("w"), col("a"), col("b"),
-            col("cu"), col("cv"))
-          .unionAll(e2.select(col("cv").as("c"), col("w"), col("a"), col("b"),
-            col("cu"), col("cv")))
-        val sel = cand.groupBy("c")
-          .agg(min(struct(col("w"), col("a"), col("b"), col("cu"), col("cv")))
-            .as("m"))
-          .select(col("m.w").as("w"), col("m.a").as("a"), col("m.b").as("b"),
-            col("m.cu").as("cu"), col("m.cv").as("cv"))
-          .distinct() // both endpoints' components may nominate the same edge
+    twin(minToll, maxLocalEdges, Some(StorageLevel.MEMORY_AND_DISK))(
+        localKruskal(spark, _)) { (ue, ueCount) =>
+      // comp: (vertex, comp) — every vertex starts as its own component.
+      var comp = ue.select(col("a").as("vertex"))
+        .unionAll(ue.select(col("b").as("vertex"))).distinct()
+        .select(col("vertex"), col("vertex").as("comp"))
+        .repartition(col("vertex")).localCheckpoint()
+      var live = ue
+      val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var round = 0
+      var liveRows = ueCount
+      while (liveRows > 0 && round < maxRounds) {
+        round += 1
+        // relabel both endpoints, keep cross-component edges only
+        val ca = comp.select(col("vertex").as("a"), col("comp").as("cu"))
+        val cb = comp.select(col("vertex").as("b"), col("comp").as("cv"))
+        val e2 = live.join(ca, "a").join(cb, "b")
+          .where(col("cu") =!= col("cv"))
           .localCheckpoint()
-        forest += sel.select("a", "b", "w")
-        // contract: components connected by nominations share a label
-        val cc = connectedComponents(
-          sel.select(col("cu").as("src"), col("cv").as("dst")),
-          maxLocalEdges = maxLocalEdges)
-        val relabel = cc.select(col("vertex").as("comp"),
-          col("component").as("newComp"))
-        comp = comp.join(relabel, Seq("comp"), "left")
-          .select(col("vertex"),
-            coalesce(col("newComp"), col("comp")).as("comp"))
-          .repartition(col("vertex")).localCheckpoint()
-        live = e2.select("a", "b", "w")
-        if (sys.env.contains("GRAFT_GRAPH_TRACE"))
-          System.err.println(s"GRAFT_MSF round=$round cross=$liveRows")
+        liveRows = e2.count()
+        if (liveRows > 0) {
+          // each component nominates its (w, a, b)-minimum incident edge
+          val cand = e2.select(col("cu").as("c"), col("w"), col("a"), col("b"),
+              col("cu"), col("cv"))
+            .unionAll(e2.select(col("cv").as("c"), col("w"), col("a"), col("b"),
+              col("cu"), col("cv")))
+          val sel = cand.groupBy("c")
+            .agg(min(struct(col("w"), col("a"), col("b"), col("cu"), col("cv")))
+              .as("m"))
+            .select(col("m.w").as("w"), col("m.a").as("a"), col("m.b").as("b"),
+              col("m.cu").as("cu"), col("m.cv").as("cv"))
+            .distinct() // both endpoints' components may nominate the same edge
+            .localCheckpoint()
+          forest += sel.select("a", "b", "w")
+          // contract: components connected by nominations share a label
+          val cc = connectedComponents(
+            sel.select(col("cu").as("src"), col("cv").as("dst")),
+            maxLocalEdges = maxLocalEdges)
+          val relabel = cc.select(col("vertex").as("comp"),
+            col("component").as("newComp"))
+          comp = comp.join(relabel, Seq("comp"), "left")
+            .select(col("vertex"),
+              coalesce(col("newComp"), col("comp")).as("comp"))
+            .repartition(col("vertex")).localCheckpoint()
+          live = e2.select("a", "b", "w")
+          trace(s"GRAFT_MSF round=$round cross=$liveRows")
+        }
       }
+      ue.unpersist()
+      // Component halving bounds convergence at log₂(V) ≤ 64 for any
+      // real V, so live cross edges here can only mean a contraction bug
+      // — fail loudly instead of returning a partial forest that would
+      // still hash-compare as "a forest" downstream.
+      require(liveRows == 0,
+        s"msf: $liveRows cross-component edges alive after $maxRounds " +
+          "Borůvka rounds — forest incomplete (contraction did not converge)")
+      if (forest.isEmpty) {
+        import spark.implicits._
+        Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
+      } else
+        forest.reduce(_ unionAll _).distinct()
+          .select(col("a").as("src"), col("b").as("dst"), col("w"))
     }
-    ue.unpersist()
-    // Component halving bounds convergence at log₂(V) ≤ 64 for any
-    // real V, so live cross edges here can only mean a contraction bug
-    // — fail loudly instead of returning a partial forest that would
-    // still hash-compare as "a forest" downstream.
-    require(liveRows == 0,
-      s"msf: $liveRows cross-component edges alive after $maxRounds " +
-        "Borůvka rounds — forest incomplete (contraction did not converge)")
-    if (forest.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
-    } else
-      forest.reduce(_ unionAll _).distinct()
-        .select(col("a").as("src"), col("b").as("dst"), col("w"))
   }
 
   /** Driver Kruskal twin: sort by (w, a, b), union-find. */
-  private def localKruskal(spark: SparkSession, ue: DataFrame): DataFrame = {
+  private def localKruskal(spark: SparkSession, rows: Array[Row]): DataFrame = {
     import spark.implicits._
-    val es = ue.collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1)))
+    val es = rows.map(r => (r.getLong(2), r.getLong(0), r.getLong(1)))
       .sortBy(identity)
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
@@ -2784,10 +2686,10 @@ object GraphOps {
   /** Driver-side Dijkstra twin of the relaxation loop: same
     * (vertex, dist) min-toll contract, identical output.
     */
-  private def localDijkstra(spark: SparkSession, e: DataFrame, source: Long): DataFrame = {
+  private def localDijkstra(spark: SparkSession, rows: Array[Row], source: Long): DataFrame = {
     import spark.implicits._
     val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-    e.collect().foreach { r =>
+    rows.foreach { r =>
       adj.computeIfAbsent(r.getLong(0),
         _ => scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]) +=
         ((r.getLong(1), r.getLong(2)))

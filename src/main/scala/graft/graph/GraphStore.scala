@@ -10,12 +10,17 @@ import org.apache.spark.sql.functions._
   * reads to replicas).
   *
   * Here a named graph is an immutable parquet edge-list snapshot:
-  * writers produce a new snapshot and atomically swap it in (rename),
-  * readers are lock-free — Spark's storage model replaces the
-  * reference's semaphore protocol, and HDFS/object-store replication
-  * replaces the secondary servers. Edges are repartitioned by `src`
-  * before write so downstream traversal joins co-locate by source
-  * vertex at scale.
+  * writers produce a new snapshot and swap it in, and HDFS/object-store
+  * replication replaces the secondary servers. The swap is NOT atomic:
+  * [[upsert]] deletes the current snapshot and then renames the staged
+  * one into place, so a reader that lists or opens the snapshot in
+  * between fails (with FileNotFoundException, or reads a missing
+  * graph). Until the swap is fixed, readers must hold the graph's lock
+  * — the per-graph readers-writer lock the writers take, as in the
+  * reference; GraphStore takes none itself — across `load` and every
+  * action on the loaded frame. Edges are repartitioned by `src` before
+  * write so downstream traversal joins co-locate by source vertex at
+  * scale.
   */
 object GraphStore {
 
@@ -56,11 +61,6 @@ object GraphStore {
   def load(spark: SparkSession, workDir: String, name: String): DataFrame =
     spark.read.parquet(path(workDir, name))
 
-  /** Parse the reference's adjacency-matrix text format (G*.txt:
-    * first line n, then n rows of n 0/1 ints) into a 1-based edge
-    * list. zipWithIndex keeps deterministic line numbers regardless of
-    * partitioning.
-    */
   /** Write a graph in the reference's adjacency-matrix text format
     * (G*.txt: first line n, then n rows of n space-separated 0/1 —
     * primary_server.c:153-176 writes exactly this). 1-based vertex
@@ -82,6 +82,11 @@ object GraphStore {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(file), sb.toString)
   }
 
+  /** Parse the reference's adjacency-matrix text format (G*.txt:
+    * first line n, then n rows of n 0/1 ints) into a 1-based edge
+    * list. zipWithIndex keeps deterministic line numbers regardless of
+    * partitioning.
+    */
   def fromAdjacencyText(spark: SparkSession, file: String): DataFrame = {
     import spark.implicits._
     val lines = spark.sparkContext.textFile(file).zipWithIndex()
